@@ -13,6 +13,7 @@ A "kind" is the reference's ENABLED_SEARCHES entry
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import Column, DataFrame
@@ -21,6 +22,7 @@ from pyspark.sql import functions as F
 from metastore_spark.operators.envelope import Envelope, run_envelope
 from metastore_spark.operators.filters import (
     filters_predicate,
+    resolves_field,
     visibility_predicate,
 )
 from metastore_spark.params import ParamError, QuerySpec, parse_params
@@ -32,6 +34,8 @@ from metastore_spark.search.scoring import bm25_scores
 # resulting ORDERING is pinned by tests/test_controllers.py:516-520,
 # so an additive constant reproduces the observable contract).
 CORE_BOOST = 4.5
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -57,50 +61,11 @@ class KindConfig:
 def _validate_filter_fields(df: DataFrame, filters: dict) -> None:
     """Unknown filter field → ParamError (reference: filtering on a
     nonexistent field is a contained error, not an empty success).
-
-    Resolves dotted paths against the schema directly — one walk over
-    a StructType, instead of the previous trick of forcing a second
-    Catalyst analysis pass per request just to surface the
-    AnalysisException. Mirrors Spark resolution under the SESSION'S
-    resolver mode (``spark.sql.caseSensitive``, default insensitive —
-    pinned against the real analyzer by
-    tests/test_filter_properties.py): struct members matched per the
-    mode, arrays traversed to their element, map access valid for any
-    key.
+    Fields without values build no predicate, so they are not checked.
     """
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    try:
-        case_sensitive = (
-            str(
-                df.sparkSession.conf.get("spark.sql.caseSensitive", "false")
-            ).lower()
-            == "true"
-        )
-    except Exception:
-        case_sensitive = False
-
-    def names_match(a: str, b: str) -> bool:
-        return a == b if case_sensitive else a.lower() == b.lower()
-
     for field, values in filters.items():
-        if not values:
-            continue  # no predicate is built for it — nothing to resolve
-        dt = df.schema
-        for part in field.split("."):
-            while isinstance(dt, ArrayType):
-                dt = dt.elementType
-            if isinstance(dt, MapType):
-                dt = dt.valueType  # any key is addressable
-                continue
-            if not isinstance(dt, StructType):
-                raise ParamError(f"unknown field: {field!r}")
-            match = next(
-                (f for f in dt.fields if names_match(f.name, part)), None
-            )
-            if match is None:
-                raise ParamError(f"unknown field: {field!r}")
-            dt = match.dataType
+        if values and not resolves_field(df, field):
+            raise ParamError(f"unknown field: {field!r}")
 
 
 class SearchEngine:
@@ -156,13 +121,17 @@ class SearchEngine:
     def search(self, kind: str, userid: str | None, params: dict) -> dict:
         """The controller contract (metastore/controllers.py:6-17):
         always returns the envelope; failures produce the empty
-        envelope with an ``error`` key, never an exception."""
+        envelope with an ``error`` key, never an exception. Each
+        contained error is logged at WARNING (kind and exception class)
+        so it leaves a trace; logging's defaults send it to stderr."""
         try:
             if kind not in self.kinds:
                 raise ParamError(f"unknown kind: {kind!r}")
             spec = parse_params(params)
             env = self._run(kind, userid, spec)
         except Exception as e:  # noqa: BLE001 — error containment is the contract
+            log.warning("contained search error: kind=%r error=%s",
+                        kind, type(e).__name__)
             env = Envelope(error=str(e))
         return env.to_dict()
 

@@ -3,20 +3,29 @@
 The reference attaches to every query (a) the total matched count
 (hits.total → summary.total, metastore/models.py:152) and (b) a sum
 aggregation over all matched docs (summary.totalBytes,
-metastore/models.py:116-117,153), regardless of pagination.
+metastore/models.py:116-117,153), regardless of pagination — both
+come back with the page from ONE Elasticsearch request.
 
-Spark-first shape: one ``agg(count, sum)`` job over the filtered frame
-(partial aggregation map-side, a single exchange of one row per
-partition — cheap at any scale), plus the paginated page itself.
+Spark-first shape, one action per request: ``count(1)`` and
+``sum(bytes)`` are observed (``DataFrame.observe``) on the filtered
+frame, and collecting the sorted ``offset/limit`` page is the action
+that computes them. The page is a TakeOrderedAndProject over every
+matched row, so the observed aggregates cover all matches at any
+scale; no frame is persisted and no second job reads the matches
+again. A plain one-job aggregate remains for requests that want no
+rows (``size <= 0``) and for a page plan Catalyst pruned the
+observation from (an offset past a row bound it knows).
 """
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from metastore_spark.operators.filters import resolves_field
 from metastore_spark.operators.paging import paginate
 
 
@@ -37,43 +46,65 @@ class Envelope:
         return out
 
 
+def _summary_cols(df: DataFrame, bytes_col: str | None) -> list[Column]:
+    """count(*) and sum(bytes); a missing bytes field sums to 0.0."""
+    if bytes_col is not None and resolves_field(df, bytes_col):
+        total_bytes = F.sum(F.col(bytes_col).cast("double"))
+    else:
+        total_bytes = F.lit(0.0)
+    return [F.count(F.lit(1)).alias("total"), total_bytes.alias("total_bytes")]
+
+
+def _summary(values: dict) -> tuple[int, float]:
+    # sum() over no rows is NULL; the reference's empty sum is 0
+    return int(values["total"]), float(values["total_bytes"] or 0.0)
+
+
 def summary_agg(filtered: DataFrame, bytes_col: str | None) -> tuple[int, float]:
     """count(*) + sum(bytes) in ONE aggregation job."""
-    aggs = [F.count(F.lit(1)).alias("total")]
-    if bytes_col is not None and _has_field(filtered, bytes_col):
-        aggs.append(F.sum(F.col(bytes_col).cast("double")).alias("total_bytes"))
-    row = filtered.agg(*aggs).first()
-    total = int(row["total"])
-    total_bytes = float(row["total_bytes"]) if "total_bytes" in row and row["total_bytes"] is not None else 0.0
-    return total, total_bytes
-
-
-def _has_field(df: DataFrame, dotted: str) -> bool:
-    try:
-        df.select(F.col(dotted))
-        return True
-    except Exception:
-        return False
+    row = filtered.agg(*_summary_cols(filtered, bytes_col)).first()
+    return _summary(row.asDict())
 
 
 def run_envelope(
     filtered: DataFrame,
-    sort_cols: list[Column] | None,
+    sort_cols: list[Column],
     offset: int,
     size: int,
     bytes_col: str | None = None,
 ) -> Envelope:
-    """Execute the canonical search shape: summary aggs + one page.
+    """Execute the canonical search shape: one page + the summary over
+    every match, in one Spark job when a page is requested.
 
-    The filtered frame feeds two jobs (summary + page); persist it so
-    the filter/scoring pipeline runs once, and release the cache
-    before returning — per-request memory is bounded by the request.
+    ``sort_cols`` must be non-empty: without a sort the page compiles
+    to a CollectLimit, which stops reading once it has ``size`` rows,
+    and the observed count would cover only the rows read.
     """
-    filtered = filtered.persist()
-    try:
+    if not sort_cols:
+        raise ValueError("run_envelope needs sort_cols: an unsorted page "
+                         "stops early and would observe a partial count")
+    if size <= 0:
+        # no rows wanted, and limit(0) would let Catalyst drop an
+        # observation from the plan: the summary alone is one aggregate
+        # job. The page is still built, for its argument checks: a
+        # negative size or offset fails analysis
+        # (INVALID_LIMIT_LIKE_EXPRESSION) before any job runs.
+        paginate(filtered, sort_cols, offset, size)
         total, total_bytes = summary_agg(filtered, bytes_col)
-        page = paginate(filtered, sort_cols, offset, size)
-        results = [r.asDict(recursive=True) for r in page.collect()]
-    finally:
-        filtered.unpersist()
+        return Envelope(total=total, total_bytes=total_bytes)
+
+    # a fresh Observation per request: concurrent requests never share one
+    name = f"envelope-{uuid.uuid4().hex}"
+    obs = Observation(name)
+    observed = filtered.observe(obs, *_summary_cols(filtered, bytes_col))
+    page = paginate(observed, sort_cols, offset, size)
+    results = [r.asDict(recursive=True) for r in page.collect()]
+    # Catalyst prunes the observation where it knows a row bound (local
+    # or range relations) and the offset reaches it: the page becomes
+    # an empty relation and Observation.get holds no metrics. The
+    # page's own query execution says whether its plan reported them.
+    if page._jdf.queryExecution().observedMetrics().contains(name):
+        total, total_bytes = _summary(obs.get)
+    else:
+        total, total_bytes = summary_agg(filtered, bytes_col)
     return Envelope(results=results, total=total, total_bytes=total_bytes)

@@ -23,6 +23,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 from metastore_spark.search.analysis import analyze_terms_column
 
@@ -113,3 +114,38 @@ def apply_filters(
 ) -> DataFrame:
     pred = filters_predicate(filters, mode)
     return df.filter(pred) if pred is not None else df
+
+
+def resolves_field(df: DataFrame, dotted: str) -> bool:
+    """Whether ``col(dotted)`` resolves on ``df``.
+
+    Walks the schema directly: one pass over a StructType, where asking
+    the analyzer would cost a Catalyst analysis and an exception per
+    miss. Mirrors Spark resolution under the SESSION'S resolver mode
+    (``spark.sql.caseSensitive``, default insensitive — pinned against
+    the real analyzer by tests/test_filter_properties.py): struct
+    members matched per the mode, arrays traversed to their element,
+    map access valid for any key.
+    """
+    case_sensitive = (
+        df.sparkSession.conf.get("spark.sql.caseSensitive", "false").lower()
+        == "true"
+    )
+
+    def names_match(a: str, b: str) -> bool:
+        return a == b if case_sensitive else a.lower() == b.lower()
+
+    dt = df.schema
+    for part in dotted.split("."):
+        while isinstance(dt, ArrayType):
+            dt = dt.elementType
+        if isinstance(dt, MapType):
+            dt = dt.valueType  # any key is addressable
+            continue
+        if not isinstance(dt, StructType):
+            return False
+        match = next((f for f in dt.fields if names_match(f.name, part)), None)
+        if match is None:
+            return False
+        dt = match.dataType
+    return True

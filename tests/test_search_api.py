@@ -351,3 +351,227 @@ def test_events_totalbytes_zero(spark, engine_factory):
     e = engine_factory(events=fx.some_event_records(spark, 4))
     out = run(e, "events", userid="datahubid")
     assert out["summary"]["totalBytes"] == 0.0
+
+
+# -- one-action envelope: edge cases, job count, concurrency, logging -------
+
+# a request that hangs (an observation never reported) fails the test
+# instead of the suite
+REQUEST_TIMEOUT_S = 120
+
+
+def _bytes_corpus(spark):
+    """Visibility variety with distinct byte sizes, so a summary that
+    drops or double-counts a row shows in totalBytes."""
+    docs = [
+        {
+            "id": f"d{i:02d}",
+            "name": f"d{i:02d}",
+            "title": f"{'cat' if i % 2 else 'dog'} data number {i}",
+            "datahub": fx._datahub(
+                owner=f"owner{i % 3}",
+                ownerid=f"owner{i % 3}",
+                findability="published" if i % 4 else "private",
+                bytes_=7 * i + 1,
+            ),
+        }
+        for i in range(12)
+    ]
+    return fx.make_datasets(spark, docs)
+
+
+def _search_with_timeout(engine, kind, userid, params):
+    import threading
+
+    out = {}
+    t = threading.Thread(
+        target=lambda: out.update(env=engine.search(kind, userid, params)),
+        daemon=True,
+    )
+    t.start()
+    t.join(REQUEST_TIMEOUT_S)
+    assert not t.is_alive(), f"search hung: {kind} {params}"
+    return out["env"]
+
+
+def _plain_summary(df, visible, bytes_col=None):
+    """count and sum over the visible rows, without the engine."""
+    from pyspark.sql import functions as F
+
+    aggs = [F.count(F.lit(1)).alias("n")]
+    if bytes_col:
+        aggs.append(F.sum(F.col(bytes_col).cast("double")).alias("b"))
+    row = df.filter(visible).agg(*aggs).first()
+    total_bytes = float(row["b"] or 0.0) if bytes_col else 0.0
+    return row["n"], total_bytes
+
+
+# case → (kind, userid, params, bounded, expect). ``expect`` names the
+# request's match set: "visible" (every visible row), "none" (no row),
+# or "error" (a contained error). ``bounded`` builds the engine over
+# frames whose row count Catalyst knows, where an offset at or past it
+# prunes the page plan.
+EDGE_CASES = {
+    "size0-dataset": ("dataset", "owner1", {"size": "0"}, False, "visible"),
+    "size0-events": ("events", None, {"size": "0"}, False, "visible"),
+    "from-past-total-dataset": (
+        "dataset", "owner1", {"from": "40", "size": "5"}, False, "visible"),
+    "from-past-total-events": (
+        "events", "datahubid", {"from": "10", "size": "5"}, False, "visible"),
+    "from-past-known-bound-dataset": (
+        "dataset", None, {"from": "40", "size": "5"}, True, "visible"),
+    "from-past-known-bound-events": (
+        "events", None, {"from": "10"}, True, "visible"),
+    "owner-no-tokens": (
+        "dataset", None, {"datahub.owner": '"the"'}, False, "none"),
+    "q-only-stopwords": (
+        "dataset", "owner1", {"q": '"the of and"'}, False, "none"),
+    "size-negative-dataset": ("dataset", None, {"size": "-1"}, False, "error"),
+    "size-negative-events": ("events", None, {"size": "-1"}, False, "error"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(EDGE_CASES))
+def test_envelope_edge_cases_match_plain_summary(spark, engine_factory, case):
+    from pyspark.sql import functions as F
+
+    kind, userid, params, bounded, expect = EDGE_CASES[case]
+    ds, ev = _bytes_corpus(spark), fx.some_event_records(spark, 10)
+    if bounded:
+        # every row fits under the bound; each case's offset reaches it
+        ds, ev = ds.limit(20), ev.limit(10)
+    out = _search_with_timeout(engine_factory(ds, ev), kind, userid, params)
+    if expect == "error":
+        assert "INVALID_LIMIT_LIKE_EXPRESSION" in out["error"]
+        assert out["summary"] == {"total": 0, "totalBytes": 0.0}
+        assert out["results"] == []
+        return
+    assert "error" not in out, out
+
+    if kind == "dataset":
+        df, bytes_col = ds, "datahub.stats.bytes"
+        visible = (F.col("datahub.findability") == "published") | (
+            F.col("datahub.ownerid") == F.lit(userid))
+    else:
+        df, bytes_col = ev, None
+        visible = (F.col("findability") == "published") | (
+            F.col("ownerid") == F.lit(userid))
+    if expect == "none":
+        visible = visible & F.lit(False)
+    total, total_bytes = _plain_summary(df, visible, bytes_col)
+    assert out["summary"] == {"total": total, "totalBytes": total_bytes}
+    assert isinstance(out["summary"]["totalBytes"], float)
+    offset = int(params.get("from", 0))
+    size = int(params.get("size", 50))
+    assert len(out["results"]) == max(0, min(size, total - offset))
+
+
+@pytest.mark.parametrize(
+    "kind,params",
+    [
+        ("dataset", {"datahub.owner": '"owner1"', "size": "3"}),
+        ("events", {"event_entity": '"flow"', "size": "3", "from": "1"}),
+    ],
+)
+def test_filter_only_search_is_one_job_and_caches_nothing(
+    spark, engine_factory, kind, params
+):
+    """The page job also yields the summary: one Spark job per
+    filter-only request, and no relation is left cached."""
+    import uuid
+
+    sc = spark.sparkContext
+    e = engine_factory(_bytes_corpus(spark), fx.some_event_records(spark, 10))
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    rdds_before = set(sc._jsc.getPersistentRDDs().keys())
+    assert cache.isEmpty()
+
+    group = f"envelope-jobs-{uuid.uuid4().hex}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = e.search(kind, "datahubid", params)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    assert "error" not in out, out
+    assert out["summary"]["total"] > 0
+
+    # the status tracker reads the listener-fed status store
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert cache.isEmpty()
+    assert set(sc._jsc.getPersistentRDDs().keys()) == rdds_before
+
+
+def test_concurrent_searches_match_sequential(spark, engine_factory):
+    """Concurrent requests on one engine each get their own summary:
+    every envelope equals the same request run alone."""
+    import sys
+    import threading
+
+    e = engine_factory(_bytes_corpus(spark), fx.some_event_records(spark, 10))
+    requests = [
+        ("dataset", None, {}),
+        ("dataset", "owner1", {"size": "4"}),
+        ("dataset", None, {"datahub.owner": '"owner2"'}),
+        ("dataset", "owner0", {"q": '"cat"'}),
+        ("dataset", None, {"q": '"dog"', "from": "2", "size": "2"}),
+        ("events", None, {}),
+        ("events", "datahubid", {"event_action": '"finished"', "size": "3"}),
+        ("events", "datahubid", {"event_entity": '"login"'}),
+    ]
+    sequential = [e.search(*r) for r in requests]
+    assert len({str(s["summary"]) for s in sequential}) > 4  # distinct answers
+
+    results: list = [None] * len(requests)
+
+    def run(i):
+        results[i] = e.search(*requests[i])
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [
+            threading.Thread(target=run, args=(i,), daemon=True)
+            for i in range(len(requests))
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(REQUEST_TIMEOUT_S)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    for req, want, got in zip(requests, sequential, results):
+        assert got == want, req
+
+
+def test_contained_error_logged_to_stderr_only():
+    """A contained error leaves a WARNING naming the kind and the
+    exception class on stderr; stdout carries only what the caller
+    prints, and the envelope is unchanged."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import json\n"
+        "from metastore_spark.api import SearchEngine\n"
+        "print(json.dumps(SearchEngine(None, {}, {}).search('nokind', None, {})))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        cwd=root, timeout=REQUEST_TIMEOUT_S,
+    )
+    assert proc.returncode == 0, proc.stderr
+    env = json.loads(proc.stdout)
+    assert env == {
+        "results": [],
+        "summary": {"total": 0, "totalBytes": 0.0},
+        "error": "unknown kind: 'nokind'",
+    }
+    assert "contained search error" in proc.stderr
+    assert "'nokind'" in proc.stderr and "ParamError" in proc.stderr
