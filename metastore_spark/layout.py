@@ -11,9 +11,6 @@ assumes:
 - **postings → bucketed by term.** Query-time term lookups prune to
   the term's bucket; two tables bucketed the same way join without a
   shuffle (index refresh merges old+new postings shuffle-free).
-- **documents → fingerprint-prefix partitions.** Exact dedup becomes
-  partition-local (identical content always lands in the same
-  partition), so the dedup groupBy never crosses partitions.
 - **incremental index refresh**: new event/doc files are drained with
   availableNow (streaming, bounded) and appended as new index
   partitions — the ES "analyze at ingest" pattern, restated as a
@@ -216,23 +213,6 @@ def ensure_bucketed_facts(
     return out
 
 
-def write_documents_by_fp_prefix(
-    df: DataFrame, path: str, text_col: str = "text", prefix_len: int = 1
-) -> None:
-    """documents → partitioned by fingerprint hex prefix (16^prefix_len
-    dirs): content-identical rows always co-locate, so exact dedup is
-    partition-local."""
-    from metastore_spark.text.ops import fingerprint
-
-    (
-        df.withColumn("fp_prefix", F.substring(fingerprint(F.col(text_col)), 1, prefix_len))
-        .repartition("fp_prefix")
-        .write.mode("overwrite")
-        .partitionBy("fp_prefix")
-        .parquet(path)
-    )
-
-
 def refresh_postings_increment(
     spark: SparkSession,
     new_docs_dir: str,
@@ -303,30 +283,6 @@ def zorder_value(a: Column, b: Column, bits: int = 16) -> Column:
             )
         )
     return z
-
-
-def write_events_zordered(
-    df: DataFrame,
-    path: str,
-    c1: str = "user_id",
-    c2: str = "event_id",
-    n_files: int = 8,
-) -> None:
-    """Rewrite a table Z-ordered on (c1, c2): range-partition by the
-    interleaved key, sort within partitions, one file per range.
-
-    This is the data-skipping compaction step a 100 TB table runs
-    periodically: scans filtered on EITHER clustered column read the
-    few row groups whose min/max intervals intersect the predicate
-    (verified against real parquet footer stats in
-    tests/test_layout_zorder.py) instead of the whole table."""
-    out = (
-        df.withColumn("_z", zorder_value(F.col(c1), F.col(c2)))
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
-    out.write.mode("overwrite").parquet(path)
 
 
 def compact_parquet(

@@ -110,14 +110,6 @@ def _dot_cols_unrolled(a: Column, b: Column, dim: int) -> Column:
     return acc
 
 
-def cosine_cols(a: Column, b: Column) -> Column:
-    """Cosine between two vector COLUMNS (sequential fold dot and
-    norms — the same op order as DuckDB's list_dot_product, so oracle
-    bit-equality holds). For pair joins: compute norms once per side
-    before the join when the pair count is large."""
-    return _dot_cols(a, b) / (_norm(a) * _norm(b))
-
-
 def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
     """Deterministic pseudo-random unit hyperplanes (LCG; fixed seed)."""
     state = seed | 1
@@ -130,21 +122,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
         norm = math.sqrt(sum(x * x for x in v)) or 1.0
         planes.append([x / norm for x in v])
     return planes
-
-
-def lsh_bucket(vec_col: Column, dim: int, n_planes: int = 8, seed: int = 7) -> Column:
-    """Random-hyperplane (SRP) bucket id: one bit per plane sign.
-
-    Charikar 2002 SimHash for cosine — vectors in the same bucket
-    agree on all n_planes signs; P[same bucket] = (1 - θ/π)^n_planes.
-    """
-    bucket = F.lit(0).cast("bigint")
-    for i, plane in enumerate(_hyperplanes(dim, n_planes, seed)):
-        sign_bit = F.when(
-            _dot_lit_unrolled(vec_col, plane) >= 0, F.lit(1)
-        ).otherwise(F.lit(0))
-        bucket = bucket + F.shiftleft(sign_bit.cast("bigint"), i)
-    return bucket
 
 
 def cosine_near_pairs(

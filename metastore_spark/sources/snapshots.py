@@ -48,6 +48,19 @@ Conflict rules (optimistic concurrency, Delta/Iceberg shape):
   compactor aborts with ConcurrentCommit;
 - `commit_with_retry` packages the re-read/retry loop with bounded
   exponential backoff for arbitrary commit callables.
+
+How a commit is built (one snapshot producer, Iceberg's shape): every
+verb records the keys it inherits through ONE carry rule,
+`_carry_manifest_extras` — schema and column IDs, stats/bloom/
+partition specs (a caller's value seeds, the parent's holds
+otherwise), cluster spec and both delete lists — and describes the
+files it just wrote with ONE segment builder, `_new_segment` (footer
+stats, partition tuples, column metadata and blooms under exactly the
+specs being committed). Three verbs break the rule on purpose, at
+their call sites only: `compact` clears the delete lists (the fold
+applied them), `commit_overwrite_files` also drops the cluster spec
+(the old rows are gone; the new files are not clustered), and the
+merge-on-read verbs append their own delete entry.
 """
 
 from __future__ import annotations
@@ -536,40 +549,77 @@ def _parent_segments(root: str, manifest: dict) -> list[str]:
     return []
 
 
-def _carry_deletes(src_manifest: dict, extra: dict) -> None:
-    """Position-delete files inherit like cluster_spec: every commit
-    that carries its parent's row set forward must carry the parent's
-    delete set, or merge-on-read deleted rows silently resurrect.
-    Compaction is the ONE deliberate non-carrier — it folds with the
-    deletes applied and clears the list (it carries bloom_cols
-    explicitly and rebuilds blooms for the fold).
-
-    ``bloom_cols`` rides along here for the same never-lapse reason
-    as stats_cols: files a rewrite produces without blooms are merely
-    unskippable (conservative), but the COLUMN OPT-IN itself must
-    survive every commit so appends and compactions keep building
-    them."""
-    if src_manifest.get("delete_files") and "delete_files" not in extra:
-        extra["delete_files"] = list(src_manifest["delete_files"])
-    if (
-        src_manifest.get("eq_delete_files")
-        and "eq_delete_files" not in extra
-    ):
-        extra["eq_delete_files"] = list(src_manifest["eq_delete_files"])
-    if src_manifest.get("bloom_cols") and "bloom_cols" not in extra:
-        extra["bloom_cols"] = list(src_manifest["bloom_cols"])
+# The manifest keys every commit inherits from its parent unless it
+# supplies its own: the ONE list of them (column IDs ride along
+# through `_ids_for_commit`, next_column_id through the peer merge).
+_INHERITED = (
+    "schema",
+    "stats_cols",
+    "bloom_cols",
+    "partition_spec",
+    "cluster_spec",
+    "delete_files",
+    "eq_delete_files",
+)
 
 
-def _carry_cluster(src_manifest: dict, extra: dict) -> None:
-    """cluster_spec inherits exactly like partition_spec: once a
-    clustered compaction records it, every later commit carries it so
-    probes can always decompose boxes against the recorded shifts."""
-    if src_manifest.get("cluster_spec") and "cluster_spec" not in extra:
-        extra["cluster_spec"] = src_manifest["cluster_spec"]
+def _carry_manifest_extras(
+    src: dict, peer: dict | None = None, **own
+) -> dict:
+    """THE carry rule: the manifest extras a commit on top of ``src``
+    records. Every `_INHERITED` key carries from ``src`` unless the
+    commit supplies its own non-empty value (a caller's stats/bloom/
+    partition spec seeds; the parent's holds otherwise), so no opt-in
+    and no delete set ever silently lapses mid-history — a commit that
+    carried rows forward without the parent's deletes would resurrect
+    them. Any other ``own`` key (lineage, ledger) is recorded as given.
+    Column IDs follow the committed schema through `_ids_for_commit`;
+    with a ``peer`` manifest (the destination chain's old head),
+    ``next_column_id`` is max-merged so a retired column ID is never
+    re-minted on either chain."""
+    extra = {k: src[k] for k in _INHERITED if src.get(k)}
+    extra.update(
+        (k, v) for k, v in own.items() if v or k not in _INHERITED
+    )
+    if "schema" in extra:
+        extra.update(_ids_for_commit(src, extra["schema"]["fields"]))
+    nxt = max(
+        int(extra.get("next_column_id") or 0),
+        int((peer or {}).get("next_column_id") or 0),
+    )
+    if nxt:
+        extra["next_column_id"] = nxt
+    return extra
 
 
-def _schema_extra(df: DataFrame) -> dict:
-    return {"schema": json.loads(df.schema.json())}
+def _new_segment(root: str, files: list[str], extra: dict) -> str:
+    """THE segment builder for files a commit just wrote, described
+    under exactly the specs it commits (``extra``, from the carry
+    rule): footer stats for stats_cols, partition tuples for the
+    partition spec, write-time column metadata under the column IDs,
+    and blooms for bloom_cols."""
+    scols = extra.get("stats_cols")
+    bcols = extra.get("bloom_cols")
+    return _write_segment(
+        root,
+        files,
+        _collect_file_stats(root, files, scols) if scols else None,
+        _spec_partitions(files, extra.get("partition_spec") or []),
+        _columns_meta(
+            extra.get("schema", {}).get("fields", []),
+            extra.get("column_ids") or {},
+        ),
+        _collect_file_blooms(root, files, bcols) if bcols else None,
+    )
+
+
+def _require_head(root: str, ref: str, empty_msg: str) -> tuple[int, dict]:
+    """(head version, head manifest) of ``ref``; ValueError on an
+    empty table or branch."""
+    parent = current_version(root, ref)
+    if not parent:
+        raise ValueError(empty_msg)
+    return parent, read_manifest(root, parent, ref)
 
 
 # ---- column-ID schema evolution (VERDICT r8 task 5) ----------------
@@ -689,19 +739,18 @@ def _evolve(root: str, transform) -> int:
         # path via Spark's implicit cast, the pyarrow DataSource path
         # via an explicit cast in spark_source._arrow_read (all legal
         # widenings are lossless, so equality is preserved).
-    extra: dict = {
-        "schema": schema,
-        "column_ids": ids,
-        "next_column_id": int(nxt),
-    }
-    if legacy:
-        extra["legacy_columns"] = legacy
-    if scols:
-        extra["stats_cols"] = scols
-    if spec:
-        extra["partition_spec"] = spec
-    _carry_cluster(m, extra)
-    _carry_deletes(m, extra)
+    # the evolved keys replace the carried ones outright: an evolution
+    # may empty stats_cols (drop_column of the only stats column)
+    extra = _carry_manifest_extras(m)
+    extra.update(
+        schema=schema,
+        column_ids=ids,
+        next_column_id=int(nxt),
+        legacy_columns=legacy,
+        stats_cols=scols,
+        partition_spec=spec,
+    )
+    extra = {k: v for k, v in extra.items() if v}
     return _commit(root, head, "evolve", _parent_segments(root, m), extra)
 
 
@@ -1449,6 +1498,174 @@ def _field_type_str(type_json):
     )
 
 
+# ---- the shared commit steps ---------------------------------------
+#
+# Every verb below is a thin wrapper over the same few steps: read the
+# head, write data, describe the new files with `_new_segment`, and
+# record `_carry_manifest_extras` in the commit file. The append- and
+# upsert-shaped verbs share their link step; the copy-on-write verbs
+# share their scan-and-rewrite step.
+
+
+def _append_head(root: str, ref: str) -> tuple[int, dict]:
+    """(head, head manifest) an append builds on, creating the table
+    on first use; a branch append may NOT create a table."""
+    if ref != "main" and not current_version(root, ref):
+        raise ValueError(f"no branch {ref!r}; create_branch first")
+    create_table(root)
+    parent = current_version(root, ref)
+    return parent, read_manifest(root, parent, ref) if parent else {}
+
+
+def _check_key_cols(pm: dict, cols: list[str]) -> None:
+    if "schema" in pm:
+        committed = {f["name"] for f in pm["schema"]["fields"]}
+        alien = [c for c in cols if c not in committed]
+        if alien:
+            raise ValueError(
+                f"key column(s) {alien} not in the committed schema"
+            )
+
+
+def _link_append(
+    root: str,
+    files: list[str],
+    own: dict,
+    pm: dict,
+    ref: str = "main",
+    parent: int | None = None,
+) -> int:
+    """The append link step, shared by `commit_append`,
+    `commit_append_files` and `snapshot_sink` (writing the files is
+    their only difference): one new segment for ``files`` on top of
+    the head ``pm``. Against a known ``parent`` this is one attempt
+    that raises ConcurrentCommit; without one, the segment is staged
+    once and re-linked on every new head until the commit lands."""
+    extra = _carry_manifest_extras(pm, **own)
+    seg = _new_segment(root, files, extra)
+    if parent is None:
+        return _commit_segments_with_retry(root, "append", [seg], own, ref)
+    return _commit(
+        root, parent, "append", _parent_segments(root, pm) + [seg], extra, ref
+    )
+
+
+def _with_eq_delete(
+    root: str, extra: dict, files: list[str], cols: list[str], scope
+) -> dict:
+    """The MOR verbs extend the carried equality-delete list with
+    their own entry, scoped to the segments written before it."""
+    extra["eq_delete_files"] = extra.get("eq_delete_files", []) + [
+        {"files": list(files), "cols": list(cols), "scope_segments": scope}
+    ]
+    _warn_read_amplification(len(extra["eq_delete_files"]), root)
+    return extra
+
+
+def _link_upsert(
+    root: str,
+    files: list[str],
+    key_files: list[str],
+    key_cols: list[str],
+    own: dict,
+    pm: dict,
+    parent: int,
+    ref: str = "main",
+) -> int:
+    """The upsert link step, shared by `commit_mor_upsert` and
+    `commit_mor_upsert_files`: the new files' segment plus an
+    equality delete of ``key_files`` scoped to every earlier segment,
+    as ONE commit on ``parent`` (raises ConcurrentCommit on a lost
+    race — the delete scope must be recomputed from the new head)."""
+    extra = _carry_manifest_extras(pm, **own)
+    prev_segs = _parent_segments(root, pm)
+    segs = prev_segs + [_new_segment(root, files, extra)]
+    _with_eq_delete(root, extra, key_files, key_cols, prev_segs)
+    return _commit(root, parent, "upsert-mor", segs, extra, ref)
+
+
+def _cow_segments(
+    spark: SparkSession,
+    root: str,
+    pm: dict,
+    extra: dict,
+    scan_prune: dict | None,
+    match,
+    keep,
+    add: DataFrame | None = None,
+) -> list[str]:
+    """The copy-on-write step of `commit_delete_where`,
+    `commit_delete_keys`, `commit_overwrite_where` and `commit_merge`:
+    one (``scan_prune``-scoped) scan of the head ``pm`` finds the files
+    holding ``match`` rows, and only those rewrite — their ``keep``
+    rows, plus ``add``'s rows when given (by-name union), land in one
+    fresh segment described under ``extra``. Returns the new segment
+    list: untouched segments carry by name (`_segments_after_removal`).
+
+    Affected files come from the hidden ``_metadata.file_path``
+    column — no per-file probe jobs — and the survivor scan subsets
+    with a broadcast semi-join on the affected set, so only the
+    manifest diff (the affected paths) is enumerated on the driver."""
+    with_file = _read_files(
+        spark, root, pm, prune=scan_prune, with_source=True
+    )
+    affected_df = match(with_file).select("_src").distinct()
+    affected = {
+        os.path.relpath(r["_src"], root) for r in affected_df.collect()
+    }
+    prev_segs = _parent_segments(root, pm)
+    if not affected and add is None:
+        return prev_segs
+    incoming = keep(
+        with_file.join(F.broadcast(affected_df), "_src", "left_semi")
+    ).drop("_src")
+    if add is not None:
+        incoming = incoming.unionByName(add, allowMissingColumns=True)
+    rewritten = _write_data_files(
+        incoming, root, extra.get("partition_spec")
+    )
+    new_segs = _segments_after_removal(root, prev_segs, affected)
+    if rewritten:
+        new_segs.append(_new_segment(root, rewritten, extra))
+    return new_segs
+
+
+def _segments_after_removal(
+    root: str, prev_segs: list[str], affected: set[str]
+) -> list[str]:
+    """The COW carry rule every rewrite commit shares: untouched
+    segments carry by NAME; partially-affected segments are replaced
+    by one that lists only their kept files, with those files'
+    existing stats/partition tuples/blooms carried forward (files
+    unchanged -> metadata unchanged); fully-affected segments
+    vanish."""
+    new_segs: list[str] = []
+    for seg in prev_segs:
+        obj = _read_segment_obj(root, seg)
+        seg_files = obj["files"]
+        kept = [f for f in seg_files if f not in affected]
+        if len(kept) == len(seg_files):
+            new_segs.append(seg)
+        elif kept:
+            sub = {
+                k: {f: obj[k][f] for f in kept if f in obj[k]} or None
+                for k in ("stats", "partitions", "blooms")
+                if k in obj
+            }
+            new_segs.append(
+                _write_segment(
+                    root,
+                    kept,
+                    sub.get("stats"),
+                    sub.get("partitions"),
+                    # files unchanged -> write-time columns unchanged
+                    obj.get("columns"),
+                    sub.get("blooms"),
+                )
+            )
+    return new_segs
+
+
 def commit_append(
     spark: SparkSession,
     root: str,
@@ -1489,40 +1706,17 @@ def commit_append(
     ``ref`` targets a branch created by `create_branch` (the
     write-audit-publish staging area); the default commits to the
     trunk. A branch append may NOT create a table."""
-    if ref != "main" and not current_version(root, ref):
-        raise ValueError(f"no branch {ref!r}; create_branch first")
-    create_table(root)
-    parent = current_version(root, ref)
-    prev_manifest = read_manifest(root, parent, ref) if parent else {}
-    _check_add_only(prev_manifest, df)
-    prev_segs = _parent_segments(root, prev_manifest) if parent else []
-    scols = stats_cols or prev_manifest.get("stats_cols") or []
-    bcols = bloom_cols or prev_manifest.get("bloom_cols") or []
-    spec = partition_by or prev_manifest.get("partition_spec") or []
-    files = _write_data_files(df, root, spec or None)
-    stats = _collect_file_stats(root, files, scols) if scols else None
-    extra = _schema_extra(df)
-    ev = _ids_for_commit(prev_manifest, extra["schema"]["fields"])
-    extra.update(ev)
-    seg = _write_segment(
-        root,
-        files,
-        stats,
-        _spec_partitions(files, spec),
-        _columns_meta(
-            extra["schema"]["fields"], ev.get("column_ids") or {}
-        ),
-        _collect_file_blooms(root, files, bcols) if bcols else None,
-    )
-    if scols:
-        extra["stats_cols"] = list(scols)
-    if bcols:
-        extra["bloom_cols"] = list(bcols)
-    if spec:
-        extra["partition_spec"] = list(spec)
-    _carry_cluster(prev_manifest, extra)
-    _carry_deletes(prev_manifest, extra)
-    return _commit(root, parent, "append", prev_segs + [seg], extra, ref)
+    parent, pm = _append_head(root, ref)
+    _check_add_only(pm, df)
+    own = {
+        "schema": json.loads(df.schema.json()),
+        "stats_cols": stats_cols,
+        "bloom_cols": bloom_cols,
+        "partition_spec": partition_by,
+    }
+    spec = _carry_manifest_extras(pm, **own).get("partition_spec")
+    files = _write_data_files(df, root, spec)
+    return _link_append(root, files, own, pm, ref, parent)
 
 
 # ---- file-based commits (the Python DataSource WRITE path) ---------
@@ -1531,10 +1725,10 @@ def commit_append(
 # DataSource writer API: EXECUTOR tasks stream their arrow batches
 # straight into staged parquet files (spark_source._write_task) and
 # the driver links the already-written files into a manifest commit.
-# These three functions are that link step — the same segment/stats/
-# bloom/partition metadata as their DataFrame twins (`commit_append`,
-# `commit_mor_upsert`), minus the write, so the data never makes a
-# second pass through the driver. A failed job leaves the staged
+# These three functions are that link step — the same
+# `_link_append` / `_link_upsert` their DataFrame twins
+# (`commit_append`, `commit_mor_upsert`) run after writing, so the
+# data never makes a second pass through the driver. A failed job leaves the staged
 # files as unreferenced orphans for `vacuum` — the format's standard
 # crash model.
 
@@ -1555,35 +1749,16 @@ def commit_append_files(
     `commit_append`, and stats/bloom/partition specs inherit from the
     head (caller values only seed a new table). Retries on concurrent
     commits re-link the staged segment (write-once data)."""
-    if ref != "main" and not current_version(root, ref):
-        raise ValueError(f"no branch {ref!r}; create_branch first")
-    create_table(root)
-    head = current_version(root, ref)
-    hm = read_manifest(root, head, ref) if head else {}
-    _check_add_only_fields(hm, schema["fields"])
-    scols = stats_cols or hm.get("stats_cols") or []
-    bcols = bloom_cols or hm.get("bloom_cols") or []
-    spec = partition_by or hm.get("partition_spec") or []
-    extra: dict = {"schema": schema}
-    ev = _ids_for_commit(hm, schema["fields"])
-    extra.update(ev)
-    seg = _write_segment(
-        root,
-        files,
-        _collect_file_stats(root, files, scols) if scols else None,
-        _spec_partitions(files, spec),
-        _columns_meta(schema["fields"], ev.get("column_ids") or {}),
-        _collect_file_blooms(root, files, bcols) if bcols else None,
-    )
-    if scols:
-        extra["stats_cols"] = list(scols)
-    if bcols:
-        extra["bloom_cols"] = list(bcols)
-    if spec:
-        extra["partition_spec"] = list(spec)
-    if extra_meta:
-        extra.update(extra_meta)
-    return _commit_segments_with_retry(root, "append", [seg], extra, ref)
+    _, pm = _append_head(root, ref)
+    _check_add_only_fields(pm, schema["fields"])
+    own = {
+        "schema": schema,
+        "stats_cols": stats_cols,
+        "bloom_cols": bloom_cols,
+        "partition_spec": partition_by,
+        **(extra_meta or {}),
+    }
+    return _link_append(root, files, own, pm, ref)
 
 
 def commit_overwrite_files(
@@ -1607,32 +1782,24 @@ def commit_overwrite_files(
     STREAMS skip the commit (op != append) — Delta's
     ignoreChanges-style contract, documented not silent."""
     create_table(root)
+    own = {
+        "schema": schema,
+        "stats_cols": stats_cols,
+        "bloom_cols": bloom_cols,
+        "partition_spec": partition_by,
+        **(extra_meta or {}),
+    }
     while True:
         parent = current_version(root)
         pm = read_manifest(root, parent) if parent else {}
         _check_add_only_fields(pm, schema["fields"])
-        scols = stats_cols or pm.get("stats_cols") or []
-        bcols = bloom_cols or pm.get("bloom_cols") or []
-        spec = partition_by or pm.get("partition_spec") or []
-        extra: dict = {"schema": schema}
-        ev = _ids_for_commit(pm, schema["fields"])
-        extra.update(ev)
-        seg = _write_segment(
-            root,
-            files,
-            _collect_file_stats(root, files, scols) if scols else None,
-            _spec_partitions(files, spec),
-            _columns_meta(schema["fields"], ev.get("column_ids") or {}),
-            _collect_file_blooms(root, files, bcols) if bcols else None,
-        )
-        if scols:
-            extra["stats_cols"] = list(scols)
-        if bcols:
-            extra["bloom_cols"] = list(bcols)
-        if spec:
-            extra["partition_spec"] = list(spec)
-        if extra_meta:
-            extra.update(extra_meta)
+        extra = _carry_manifest_extras(pm, **own)
+        # deliberate break of the carry rule: the old rows are gone, so
+        # their deletes would be dead metadata, and the new files are
+        # not Z-clustered
+        for k in ("cluster_spec", "delete_files", "eq_delete_files"):
+            extra.pop(k, None)
+        seg = _new_segment(root, files, extra)
         try:
             return _commit(root, parent, "overwrite", [seg], extra)
         except ConcurrentCommit:
@@ -1661,59 +1828,16 @@ def commit_mor_upsert_files(
     missing = [c for c in key_cols if c not in incoming]
     if missing:
         raise ValueError(f"key column(s) {missing} not in the frame")
+    own = {"schema": schema, **(extra_meta or {})}
     while True:
-        parent = current_version(root)
-        if not parent:
-            raise ValueError(
-                "cannot upsert into an empty table; append first"
-            )
-        pm = read_manifest(root, parent)
-        if "schema" in pm:
-            committed = {f["name"] for f in pm["schema"]["fields"]}
-            alien = [c for c in key_cols if c not in committed]
-            if alien:
-                raise ValueError(
-                    f"key column(s) {alien} not in the committed schema"
-                )
-        _check_add_only_fields(pm, schema["fields"])
-        prev_segs = _parent_segments(root, pm)
-        scols = pm.get("stats_cols") or []
-        bcols = pm.get("bloom_cols") or []
-        spec = pm.get("partition_spec") or []
-        extra: dict = {"schema": schema}
-        ev = _ids_for_commit(pm, schema["fields"])
-        extra.update(ev)
-        seg = _write_segment(
-            root,
-            files,
-            _collect_file_stats(root, files, scols) if scols else None,
-            _spec_partitions(files, spec),
-            _columns_meta(schema["fields"], ev.get("column_ids") or {}),
-            _collect_file_blooms(root, files, bcols) if bcols else None,
+        parent, pm = _require_head(
+            root, "main", "cannot upsert into an empty table; append first"
         )
-        if scols:
-            extra["stats_cols"] = list(scols)
-        if bcols:
-            extra["bloom_cols"] = list(bcols)
-        if spec:
-            extra["partition_spec"] = list(spec)
-        _carry_cluster(pm, extra)
-        _carry_deletes(pm, extra)  # position deletes; eq below
-        extra["eq_delete_files"] = list(
-            pm.get("eq_delete_files") or []
-        ) + [
-            {
-                "files": list(key_files),
-                "cols": list(key_cols),
-                "scope_segments": list(prev_segs),
-            }
-        ]
-        if extra_meta:
-            extra.update(extra_meta)
-        _warn_read_amplification(len(extra["eq_delete_files"]), root)
+        _check_key_cols(pm, key_cols)
+        _check_add_only_fields(pm, schema["fields"])
         try:
-            return _commit(
-                root, parent, "upsert-mor", prev_segs + [seg], extra
+            return _link_upsert(
+                root, files, key_files, key_cols, own, pm, parent
             )
         except ConcurrentCommit:
             continue
@@ -1750,79 +1874,24 @@ def commit_delete_where(
     the predicate must be FALSE on every row of every pruned-out file,
     else those matching rows silently survive.
     """
-    parent = current_version(root, ref)
-    if not parent:
-        raise ValueError("cannot delete from an empty table or branch")
-    prev_manifest = read_manifest(root, parent, ref)
-    prev_segs = _parent_segments(root, prev_manifest)
+    parent, pm = _require_head(
+        root, ref, "cannot delete from an empty table or branch"
+    )
     # three-valued logic pinned once and reused by BOTH the affected-
     # file scan and the survivor filter, so they can never disagree on
     # a NULL-predicate row
     hit = F.coalesce(predicate.cast("boolean"), F.lit(False))
-    # _metadata.file_path spells the local path as file:/... — strip
-    # the scheme so manifest-relative paths compare cleanly
-    with_file = _read_files(
-        spark, root, prev_manifest, prune=scan_prune, with_source=True
+    extra = _carry_manifest_extras(pm)
+    segs = _cow_segments(
+        spark,
+        root,
+        pm,
+        extra,
+        scan_prune,
+        lambda d: d.filter(hit),
+        lambda d: d.filter(~hit),
     )
-    affected_df = with_file.filter(hit).select("_src").distinct()
-    affected = {
-        os.path.relpath(r["_src"], root) for r in affected_df.collect()
-    }
-    schema_extra = (
-        {"schema": prev_manifest["schema"]}
-        if "schema" in prev_manifest
-        else None
-    )
-    if schema_extra is not None:
-        schema_extra.update(
-            _ids_for_commit(
-                prev_manifest, prev_manifest["schema"]["fields"]
-            )
-        )
-    spec = prev_manifest.get("partition_spec") or []
-    if not affected:
-        extra = dict(schema_extra or {})
-        if prev_manifest.get("stats_cols"):
-            extra["stats_cols"] = list(prev_manifest["stats_cols"])
-        if spec:
-            extra["partition_spec"] = list(spec)
-        _carry_cluster(prev_manifest, extra)
-        _carry_deletes(prev_manifest, extra)
-        return _commit(root, parent, "delete", prev_segs, extra or None, ref)
-    survivors = (
-        with_file.join(F.broadcast(affected_df), "_src", "left_semi")
-        .filter(~hit)
-        .drop("_src")
-    )
-    scols = prev_manifest.get("stats_cols") or []
-    rewritten = _write_data_files(survivors, root, spec or None)
-    new_segs = _segments_after_removal(root, prev_segs, affected)
-    if rewritten:
-        new_segs.append(
-            _write_segment(
-                root,
-                rewritten,
-                _collect_file_stats(root, rewritten, scols)
-                if scols
-                else None,
-                _spec_partitions(rewritten, spec),
-                _columns_meta(
-                    prev_manifest["schema"]["fields"],
-                    (schema_extra or {}).get("column_ids") or {},
-                )
-                if "schema" in prev_manifest
-                else None,
-            )
-        )
-    if schema_extra is None:
-        schema_extra = {}
-    if scols:
-        schema_extra["stats_cols"] = list(scols)
-    if spec:
-        schema_extra["partition_spec"] = list(spec)
-    _carry_cluster(prev_manifest, schema_extra)
-    _carry_deletes(prev_manifest, schema_extra)
-    return _commit(root, parent, "delete", new_segs, schema_extra or None, ref)
+    return _commit(root, parent, "delete", segs, extra, ref)
 
 
 def commit_mor_delete(
@@ -1853,46 +1922,24 @@ def commit_mor_delete(
     (prunable) scan + O(matches) delete rows + an O(#segments)
     commit; reads pay one anti-join against O(accumulated deletes).
     """
-    parent = current_version(root, ref)
-    if not parent:
-        raise ValueError("cannot delete from an empty table or branch")
-    prev_manifest = read_manifest(root, parent, ref)
-    prev_segs = _parent_segments(root, prev_manifest)
-    hit = F.coalesce(predicate.cast("boolean"), F.lit(False))
-    live = _read_files(
-        spark, root, prev_manifest, prune=scan_prune, with_pos=True
+    parent, pm = _require_head(
+        root, ref, "cannot delete from an empty table or branch"
     )
-    positions = (
-        live.filter(hit)
-        .select(
-            F.col("_mor_file").alias("file_name"),
-            F.col("_mor_pos").alias("pos"),
-        )
+    hit = F.coalesce(predicate.cast("boolean"), F.lit(False))
+    live = _read_files(spark, root, pm, prune=scan_prune, with_pos=True)
+    positions = live.filter(hit).select(
+        F.col("_mor_file").alias("file_name"),
+        F.col("_mor_pos").alias("pos"),
     )
     # bounded fan-in (no shuffle): a position set is O(matches) rows
     # of two small columns — 16 writers keep the write parallel while
     # capping the per-commit delete-file count
     written = _write_data_files(positions.coalesce(16), root)
-    extra: dict = {}
-    if "schema" in prev_manifest:
-        extra["schema"] = prev_manifest["schema"]
-        extra.update(
-            _ids_for_commit(
-                prev_manifest, prev_manifest["schema"]["fields"]
-            )
-        )
-    if prev_manifest.get("stats_cols"):
-        extra["stats_cols"] = list(prev_manifest["stats_cols"])
-    if prev_manifest.get("partition_spec"):
-        extra["partition_spec"] = list(prev_manifest["partition_spec"])
-    _carry_cluster(prev_manifest, extra)
-    extra["delete_files"] = (
-        list(prev_manifest.get("delete_files") or []) + written
-    )
-    if prev_manifest.get("eq_delete_files"):
-        extra["eq_delete_files"] = list(prev_manifest["eq_delete_files"])
+    extra = _carry_manifest_extras(pm)
+    # the MOR verbs extend the carried delete list with their own entry
+    extra["delete_files"] = extra.get("delete_files", []) + written
     return _commit(
-        root, parent, "delete-mor", prev_segs, extra or None, ref
+        root, parent, "delete-mor", _parent_segments(root, pm), extra, ref
     )
 
 
@@ -1930,53 +1977,19 @@ def commit_mor_delete_keys(
     metadata; reads pay one anti-join per accumulated entry (AQE
     broadcasts small key sets), so compact regularly under sustained
     CDC — exactly Iceberg's guidance."""
-    parent = current_version(root, ref)
-    if not parent:
-        raise ValueError("cannot delete from an empty table or branch")
-    prev_manifest = read_manifest(root, parent, ref)
+    parent, pm = _require_head(
+        root, ref, "cannot delete from an empty table or branch"
+    )
     cols = list(keys_df.columns)
     if not cols:
         raise ValueError("keys_df needs at least one key column")
-    if "schema" in prev_manifest:
-        committed = {
-            f["name"] for f in prev_manifest["schema"]["fields"]
-        }
-        missing = [c for c in cols if c not in committed]
-        if missing:
-            raise ValueError(
-                f"key column(s) {missing} not in the committed schema"
-            )
-    prev_segs = _parent_segments(root, prev_manifest)
-    written = _write_data_files(
-        keys_df.dropDuplicates().coalesce(4), root
+    _check_key_cols(pm, cols)
+    written = _write_data_files(keys_df.dropDuplicates().coalesce(4), root)
+    prev_segs = _parent_segments(root, pm)
+    extra = _with_eq_delete(
+        root, _carry_manifest_extras(pm), written, cols, prev_segs
     )
-    entry = {
-        "files": written,
-        "cols": cols,
-        "scope_segments": list(prev_segs),
-    }
-    extra: dict = {}
-    if "schema" in prev_manifest:
-        extra["schema"] = prev_manifest["schema"]
-        extra.update(
-            _ids_for_commit(
-                prev_manifest, prev_manifest["schema"]["fields"]
-            )
-        )
-    if prev_manifest.get("stats_cols"):
-        extra["stats_cols"] = list(prev_manifest["stats_cols"])
-    if prev_manifest.get("partition_spec"):
-        extra["partition_spec"] = list(prev_manifest["partition_spec"])
-    _carry_cluster(prev_manifest, extra)
-    if prev_manifest.get("delete_files"):
-        extra["delete_files"] = list(prev_manifest["delete_files"])
-    extra["eq_delete_files"] = list(
-        prev_manifest.get("eq_delete_files") or []
-    ) + [entry]
-    _warn_read_amplification(len(extra["eq_delete_files"]), root)
-    return _commit(
-        root, parent, "delete-mor-eq", prev_segs, extra or None, ref
-    )
+    return _commit(root, parent, "delete-mor-eq", prev_segs, extra, ref)
 
 
 def commit_mor_upsert(
@@ -2013,31 +2026,17 @@ def commit_mor_upsert(
     rows survive (and null-keyed incoming rows are plain inserts)."""
     if not key_cols:
         raise ValueError("key_cols must name at least one column")
-    parent = current_version(root, ref)
-    if not parent:
-        raise ValueError(
-            "cannot upsert into an empty table or branch; "
-            "commit_append first"
-        )
+    parent, pm = _require_head(
+        root,
+        ref,
+        "cannot upsert into an empty table or branch; commit_append first",
+    )
     missing = [c for c in key_cols if c not in df.columns]
     if missing:
         raise ValueError(f"key column(s) {missing} not in the frame")
-    prev_manifest = read_manifest(root, parent, ref)
-    if "schema" in prev_manifest:
-        committed = {
-            f["name"] for f in prev_manifest["schema"]["fields"]
-        }
-        alien = [c for c in key_cols if c not in committed]
-        if alien:
-            raise ValueError(
-                f"key column(s) {alien} not in the committed schema"
-            )
-    _check_add_only(prev_manifest, df)
-    prev_segs = _parent_segments(root, prev_manifest)
-    scols = prev_manifest.get("stats_cols") or []
-    bcols = prev_manifest.get("bloom_cols") or []
-    spec = prev_manifest.get("partition_spec") or []
-    files = _write_data_files(df, root, spec or None)
+    _check_key_cols(pm, key_cols)
+    _check_add_only(pm, df)
+    files = _write_data_files(df, root, pm.get("partition_spec"))
     # Derive the key sidecar from the JUST-STAGED files, not from
     # ``df`` again: evaluating ``df`` twice re-executes its whole
     # upstream plan (for a CDC micro-batch, a second pass over the
@@ -2054,42 +2053,10 @@ def commit_mor_upsert(
     key_files = _write_data_files(
         key_src.dropDuplicates().coalesce(4), root
     )
-    stats = _collect_file_stats(root, files, scols) if scols else None
-    extra = _schema_extra(df)
-    ev = _ids_for_commit(prev_manifest, extra["schema"]["fields"])
-    extra.update(ev)
-    seg = _write_segment(
-        root,
-        files,
-        stats,
-        _spec_partitions(files, spec),
-        _columns_meta(
-            extra["schema"]["fields"], ev.get("column_ids") or {}
-        ),
-        _collect_file_blooms(root, files, bcols) if bcols else None,
-    )
-    if scols:
-        extra["stats_cols"] = list(scols)
-    if bcols:
-        extra["bloom_cols"] = list(bcols)
-    if spec:
-        extra["partition_spec"] = list(spec)
-    _carry_cluster(prev_manifest, extra)
-    _carry_deletes(prev_manifest, extra)  # position deletes; eq below
-    extra["eq_delete_files"] = list(
-        prev_manifest.get("eq_delete_files") or []
-    ) + [
-        {
-            "files": key_files,
-            "cols": list(key_cols),
-            "scope_segments": list(prev_segs),
-        }
-    ]
-    if extra_meta:
-        extra.update(extra_meta)  # e.g. the (stream_id, batch_id) ledger
-    _warn_read_amplification(len(extra["eq_delete_files"]), root)
-    return _commit(
-        root, parent, "upsert-mor", prev_segs + [seg], extra, ref
+    # extra_meta: e.g. the (stream_id, batch_id) ledger
+    own = {"schema": json.loads(df.schema.json()), **(extra_meta or {})}
+    return _link_upsert(
+        root, files, key_files, key_cols, own, pm, parent, ref
     )
 
 
@@ -2117,112 +2084,30 @@ def commit_overwrite_where(
     treats an overwrite like a delete — a restatement is not an
     append-feed event; incremental consumers reseed from a snapshot.
     """
-    parent = current_version(root, ref)
-    if not parent:
-        raise ValueError("cannot overwrite in an empty table or branch")
-    prev_manifest = read_manifest(root, parent, ref)
-    prev_segs = _parent_segments(root, prev_manifest)
-    _check_add_only(prev_manifest, df)
+    parent, pm = _require_head(
+        root, ref, "cannot overwrite in an empty table or branch"
+    )
+    _check_add_only(pm, df)
     hit = F.coalesce(predicate.cast("boolean"), F.lit(False))
-    stray = df.filter(~F.coalesce(predicate.cast("boolean"), F.lit(False)))
-    if stray.limit(1).count():
+    if df.filter(~hit).limit(1).count():
         raise ValueError(
             "replacement rows must satisfy the overwrite predicate "
             "(Delta replaceWhere contract); found rows outside it"
         )
-    with_file = _read_files(
-        spark, root, prev_manifest, prune=scan_prune, with_source=True
+    extra = _carry_manifest_extras(pm, schema=json.loads(df.schema.json()))
+    segs = _cow_segments(
+        spark,
+        root,
+        pm,
+        extra,
+        scan_prune,
+        lambda d: d.filter(hit),
+        lambda d: d.filter(~hit),
     )
-    affected_df = with_file.filter(hit).select("_src").distinct()
-    affected = {
-        os.path.relpath(r["_src"], root) for r in affected_df.collect()
-    }
-    scols = prev_manifest.get("stats_cols") or []
-    spec = prev_manifest.get("partition_spec") or []
-    extra = _schema_extra(df)
-    ev = _ids_for_commit(prev_manifest, extra["schema"]["fields"])
-    extra.update(ev)
-    if scols:
-        extra["stats_cols"] = list(scols)
-    if spec:
-        extra["partition_spec"] = list(spec)
-    _carry_cluster(prev_manifest, extra)
-    _carry_deletes(prev_manifest, extra)
-    new_segs = _segments_after_removal(root, prev_segs, affected)
-    if affected:
-        survivors = (
-            with_file.join(F.broadcast(affected_df), "_src", "left_semi")
-            .filter(~hit)
-            .drop("_src")
-        )
-        rewritten = _write_data_files(survivors, root, spec or None)
-        if rewritten:
-            new_segs.append(
-                _write_segment(
-                    root,
-                    rewritten,
-                    _collect_file_stats(root, rewritten, scols)
-                    if scols
-                    else None,
-                    _spec_partitions(rewritten, spec),
-                    _columns_meta(
-                        prev_manifest["schema"]["fields"],
-                        ev.get("column_ids") or {},
-                    )
-                    if "schema" in prev_manifest
-                    else None,
-                )
-            )
-    inserted = _write_data_files(df, root, spec or None)
+    inserted = _write_data_files(df, root, extra.get("partition_spec"))
     if inserted:
-        new_segs.append(
-            _write_segment(
-                root,
-                inserted,
-                _collect_file_stats(root, inserted, scols)
-                if scols
-                else None,
-                _spec_partitions(inserted, spec),
-                _columns_meta(
-                    extra["schema"]["fields"],
-                    ev.get("column_ids") or {},
-                ),
-            )
-        )
-    return _commit(root, parent, "overwrite", new_segs, extra, ref)
-
-
-def _segments_after_removal(
-    root: str, prev_segs: list[str], affected: set[str]
-) -> list[str]:
-    """The COW carry rule every rewrite commit shares: untouched
-    segments carry by NAME; partially-affected segments are replaced
-    by one that lists only their kept files, with those files'
-    existing stats/partition tuples carried forward (files unchanged
-    -> metadata unchanged); fully-affected segments vanish."""
-    new_segs: list[str] = []
-    for seg in prev_segs:
-        obj = _read_segment_obj(root, seg)
-        seg_files = obj["files"]
-        kept = [f for f in seg_files if f not in affected]
-        if len(kept) == len(seg_files):
-            new_segs.append(seg)
-        elif kept:
-            old_stats = obj.get("stats", {})
-            old_parts = obj.get("partitions", {})
-            new_segs.append(
-                _write_segment(
-                    root,
-                    kept,
-                    {f: old_stats[f] for f in kept if f in old_stats}
-                    or None,
-                    {f: old_parts[f] for f in kept if f in old_parts}
-                    or None,
-                    # files unchanged -> write-time columns unchanged
-                    obj.get("columns"),
-                )
-            )
-    return new_segs
+        segs.append(_new_segment(root, inserted, extra))
+    return _commit(root, parent, "overwrite", segs, extra, ref)
 
 
 def commit_merge(
@@ -2259,11 +2144,8 @@ def commit_merge(
     if not parent:
         # empty table: a merge is just the first append
         return commit_append(spark, root, source, ref=ref)
-    prev_manifest = read_manifest(root, parent, ref)
-    _check_add_only(prev_manifest, source)
-    prev_segs = _parent_segments(root, prev_manifest)
-    spec = prev_manifest.get("partition_spec") or []
-    scols = prev_manifest.get("stats_cols") or []
+    pm = read_manifest(root, parent, ref)
+    _check_add_only(pm, source)
 
     # NULL-keyed source rows are excluded from the duplicate guard:
     # NULL keys never match any target row (SQL join semantics), so
@@ -2289,48 +2171,25 @@ def commit_merge(
         )
 
     keys = source.select(*key_cols).distinct()
-    with_file = _read_files(
-        spark, root, prev_manifest, prune=scan_prune, with_source=True
+    # one fresh segment: survivors (rows whose key has NO source
+    # match) + the full source (updates and inserts alike); the
+    # by-name union null-fills an add-only widened source's new
+    # columns in the survivors (the committed schema is the source's —
+    # readers resolve columns by name)
+    extra = _carry_manifest_extras(
+        pm, schema=json.loads(source.schema.json())
     )
-    matched = with_file.join(F.broadcast(keys), key_cols, "left_semi")
-    affected_df = matched.select("_src").distinct()
-    affected = {
-        os.path.relpath(r["_src"], root) for r in affected_df.collect()
-    }
-    # survivors of affected files: rows whose key has NO source match
-    survivors = (
-        with_file.join(F.broadcast(affected_df), "_src", "left_semi")
-        .join(F.broadcast(keys), key_cols, "left_anti")
-        .drop("_src")
+    segs = _cow_segments(
+        spark,
+        root,
+        pm,
+        extra,
+        scan_prune,
+        lambda d: d.join(F.broadcast(keys), key_cols, "left_semi"),
+        lambda d: d.join(F.broadcast(keys), key_cols, "left_anti"),
+        add=source,
     )
-    # one fresh segment: survivors + the full source (updates and
-    # inserts alike); by-name union so an add-only widened source
-    # null-fills the survivors' missing columns (the committed schema
-    # below is the source's — readers resolve columns by name)
-    incoming = survivors.unionByName(source, allowMissingColumns=True)
-    rewritten = _write_data_files(incoming, root, spec or None)
-    new_segs = _segments_after_removal(root, prev_segs, affected)
-    extra = _schema_extra(source)
-    ev = _ids_for_commit(prev_manifest, extra["schema"]["fields"])
-    extra.update(ev)
-    new_segs.append(
-        _write_segment(
-            root,
-            rewritten,
-            _collect_file_stats(root, rewritten, scols) if scols else None,
-            _spec_partitions(rewritten, spec),
-            _columns_meta(
-                extra["schema"]["fields"], ev.get("column_ids") or {}
-            ),
-        )
-    )
-    if scols:
-        extra["stats_cols"] = list(scols)
-    if spec:
-        extra["partition_spec"] = list(spec)
-    _carry_cluster(prev_manifest, extra)
-    _carry_deletes(prev_manifest, extra)
-    return _commit(root, parent, "merge", new_segs, extra, ref)
+    return _commit(root, parent, "merge", segs, extra, ref)
 
 
 def commit_delete_keys(
@@ -2354,71 +2213,21 @@ def commit_delete_keys(
     scan; only they rewrite; untouched segments carry by name), and
     the same NULL rule: NULL keys never match, so NULL-keyed target
     rows always survive."""
-    parent = current_version(root, ref)
-    if not parent:
-        raise ValueError("cannot delete from an empty table or branch")
-    prev_manifest = read_manifest(root, parent, ref)
-    prev_segs = _parent_segments(root, prev_manifest)
-    spec = prev_manifest.get("partition_spec") or []
-    scols = prev_manifest.get("stats_cols") or []
+    parent, pm = _require_head(
+        root, ref, "cannot delete from an empty table or branch"
+    )
     kdf = keys.select(*key_cols).distinct()
-    with_file = _read_files(
-        spark, root, prev_manifest, prune=scan_prune, with_source=True
+    extra = _carry_manifest_extras(pm)
+    segs = _cow_segments(
+        spark,
+        root,
+        pm,
+        extra,
+        scan_prune,
+        lambda d: d.join(F.broadcast(kdf), key_cols, "left_semi"),
+        lambda d: d.join(F.broadcast(kdf), key_cols, "left_anti"),
     )
-    affected_df = (
-        with_file.join(F.broadcast(kdf), key_cols, "left_semi")
-        .select("_src")
-        .distinct()
-    )
-    affected = {
-        os.path.relpath(r["_src"], root) for r in affected_df.collect()
-    }
-    extra: dict = (
-        {"schema": prev_manifest["schema"]}
-        if "schema" in prev_manifest
-        else {}
-    )
-    if "schema" in prev_manifest:
-        extra.update(
-            _ids_for_commit(
-                prev_manifest, prev_manifest["schema"]["fields"]
-            )
-        )
-    if scols:
-        extra["stats_cols"] = list(scols)
-    if spec:
-        extra["partition_spec"] = list(spec)
-    if not affected:
-        _carry_cluster(prev_manifest, extra)
-        _carry_deletes(prev_manifest, extra)
-        return _commit(root, parent, "delete", prev_segs, extra or None, ref)
-    survivors = (
-        with_file.join(F.broadcast(affected_df), "_src", "left_semi")
-        .join(F.broadcast(kdf), key_cols, "left_anti")
-        .drop("_src")
-    )
-    rewritten = _write_data_files(survivors, root, spec or None)
-    new_segs = _segments_after_removal(root, prev_segs, affected)
-    if rewritten:
-        new_segs.append(
-            _write_segment(
-                root,
-                rewritten,
-                _collect_file_stats(root, rewritten, scols)
-                if scols
-                else None,
-                _spec_partitions(rewritten, spec),
-                _columns_meta(
-                    prev_manifest["schema"]["fields"],
-                    extra.get("column_ids") or {},
-                )
-                if "schema" in prev_manifest
-                else None,
-            )
-        )
-    _carry_cluster(prev_manifest, extra)
-    _carry_deletes(prev_manifest, extra)
-    return _commit(root, parent, "delete", new_segs, extra or None, ref)
+    return _commit(root, parent, "delete", segs, extra, ref)
 
 
 def rollback_to(root: str, version: int) -> int:
@@ -2431,63 +2240,15 @@ def rollback_to(root: str, version: int) -> int:
     if not (1 <= version <= head):
         raise ValueError(f"no version {version} to roll back to")
     target = read_manifest(root, version)
-    segs = _parent_segments(root, target)
-    extra: dict = {"rolled_back_to": version}
-    if "schema" in target:
-        extra["schema"] = target["schema"]
-    if target.get("stats_cols"):
-        extra["stats_cols"] = list(target["stats_cols"])
-    if target.get("partition_spec"):
-        extra["partition_spec"] = list(target["partition_spec"])
     # rolling back across an evolution restores the target's schema
-    # AND mapping; next_column_id stays at the table-wide max so a
-    # retired ID is never re-minted
-    for k in (
-        "column_ids", "legacy_columns", "cluster_spec", "delete_files",
-        "eq_delete_files", "bloom_cols",
-    ):
-        if target.get(k):
-            extra[k] = target[k]
-    head_m = read_manifest(root, head)
-    nxt = max(
-        int(target.get("next_column_id") or 0),
-        int(head_m.get("next_column_id") or 0),
+    # AND mapping; the head as peer keeps next_column_id at the
+    # table-wide max so a retired ID is never re-minted
+    extra = _carry_manifest_extras(
+        target, read_manifest(root, head), rolled_back_to=version
     )
-    if nxt:
-        extra["next_column_id"] = nxt
-    return _commit(root, head, "rollback", segs, extra)
-
-
-def _carry_manifest_extras(src: dict, peer: dict | None = None) -> dict:
-    """The metadata a segment-carrying commit (branch fork, publish,
-    rollback) must inherit from its source manifest so readers of the
-    new commit resolve schema, stats, partition spec, cluster spec and
-    column-ID mapping exactly as they did at the source. When a
-    ``peer`` manifest is given (the destination chain's old head),
-    ``next_column_id`` is max-merged so a retired column ID is never
-    re-minted on either chain."""
-    extra: dict = {}
-    if "schema" in src:
-        extra["schema"] = src["schema"]
-    for k in (
-        "stats_cols",
-        "partition_spec",
-        "column_ids",
-        "legacy_columns",
-        "cluster_spec",
-        "delete_files",
-        "eq_delete_files",
-        "bloom_cols",
-    ):
-        if src.get(k):
-            extra[k] = src[k]
-    nxt = max(
-        int(src.get("next_column_id") or 0),
-        int((peer or {}).get("next_column_id") or 0),
+    return _commit(
+        root, head, "rollback", _parent_segments(root, target), extra
     )
-    if nxt:
-        extra["next_column_id"] = nxt
-    return extra
 
 
 def create_branch(root: str, name: str, version: int | None = None) -> int:
@@ -3218,40 +2979,26 @@ def _commit_segments_with_retry(
     prefix changes. Write-once: the data AND segment files are staged
     exactly once; each retry re-links an O(#segments) commit file.
 
-    stats_cols inheritance is re-derived from the CURRENT parent on
-    every attempt (merged with the caller's own): if a concurrent
-    commit establishes stats_cols between the caller's head read and
-    the winning retry, the inheritance guarantee ("once set, never
-    silently lapses") still holds for this and all later commits. The
-    already-staged segments may lack stats for the newly-inherited
-    columns — safe: stats-less files are conservatively never skipped."""
+    ``extra`` holds the commit's OWN keys (schema, caller specs,
+    stream ledger); everything inherited is re-derived from the
+    CURRENT parent on every attempt through the carry rule: if a
+    concurrent commit establishes stats_cols, bloom_cols, deletes or
+    column IDs between the caller's head read and the winning retry,
+    the inheritance guarantee ("once set, never silently lapses")
+    still holds for this and all later commits. The already-staged
+    segments may lack stats/blooms for newly-inherited columns — safe:
+    such files are conservatively never skipped."""
     while True:
         parent = current_version(root, ref)
         pm = read_manifest(root, parent, ref) if parent else {}
-        prev = _parent_segments(root, pm) if parent else []
-        attempt_extra = dict(extra or {})
-        own = list(attempt_extra.get("stats_cols") or [])
-        inherited = [
-            c for c in (pm.get("stats_cols") or []) if c not in own
-        ]
-        if own or inherited:
-            attempt_extra["stats_cols"] = own + inherited
-        if "partition_spec" not in attempt_extra and pm.get(
-            "partition_spec"
-        ):
-            attempt_extra["partition_spec"] = list(pm["partition_spec"])
-        _carry_cluster(pm, attempt_extra)
-        _carry_deletes(pm, attempt_extra)
-        # column-ID inheritance mirrors stats_cols: if a concurrent
-        # commit established IDs between the caller's head read and
-        # the winning retry, re-derive the mapping from the current
-        # parent so the ID lineage never silently lapses
-        if "column_ids" not in attempt_extra and pm.get("column_ids"):
-            fields = attempt_extra.get("schema", {}).get("fields", [])
-            attempt_extra.update(_ids_for_commit(pm, fields))
         try:
             return _commit(
-                root, parent, op, prev + new_segments, attempt_extra, ref
+                root,
+                parent,
+                op,
+                _parent_segments(root, pm) + new_segments,
+                _carry_manifest_extras(pm, **(extra or {})),
+                ref,
             )
         except ConcurrentCommit:
             continue
@@ -3274,31 +3021,14 @@ def snapshot_sink(root: str, stream_id: str):
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         if _find_stream_commit(root, stream_id, batch_id) is not None:
             return  # re-delivered after a post-commit crash
-        create_table(root)
-        head = current_version(root)
-        hm = read_manifest(root, head) if head else {}
-        scols = hm.get("stats_cols") or []
-        spec = hm.get("partition_spec") or []
-        files = _write_data_files(batch_df, root, spec or None)
-        extra = {
+        _, pm = _append_head(root, "main")
+        files = _write_data_files(batch_df, root, pm.get("partition_spec"))
+        own = {
+            "schema": json.loads(batch_df.schema.json()),
             "stream_id": stream_id,
             "batch_id": batch_id,
-            **_schema_extra(batch_df),
         }
-        ev = _ids_for_commit(hm, extra["schema"]["fields"])
-        extra.update(ev)
-        seg = _write_segment(
-            root,
-            files,
-            _collect_file_stats(root, files, scols) if scols else None,
-            _spec_partitions(files, spec),
-            _columns_meta(
-                extra["schema"]["fields"], ev.get("column_ids") or {}
-            ),
-        )
-        if scols:
-            extra["stats_cols"] = list(scols)
-        _commit_segments_with_retry(root, "append", [seg], extra)
+        _link_append(root, files, own, pm)
 
     return write_batch
 
@@ -3458,27 +3188,16 @@ def compact(
         )
     else:
         rewritten = _write_data_files(df.coalesce(target_files), root)
-    scols = base_manifest.get("stats_cols") or []
-    bcols = base_manifest.get("bloom_cols") or []
     written_schema = json.loads(df.schema.json())
-    folded_ids = _ids_for_commit(base_manifest, written_schema["fields"])
-    folded_seg = _write_segment(
+    # the fold physically rewrites rows under the base's COMMITTED
+    # schema (+ the cluster cell column) — evolution collapses out of
+    # the rewritten files
+    folded_seg = _new_segment(
         root,
         rewritten,
-        _collect_file_stats(root, rewritten, scols) if scols else None,
-        _spec_partitions(rewritten, spec),
-        # the fold physically rewrites rows under the base's COMMITTED
-        # schema (+ the cluster cell column) — evolution collapses out
-        # of the rewritten files
-        _columns_meta(
-            written_schema["fields"],
-            folded_ids.get("column_ids")
-            or base_manifest.get("column_ids")
-            or {},
-        )
-        if "schema" in base_manifest
-        else None,
-        _collect_file_blooms(root, rewritten, bcols) if bcols else None,
+        _carry_manifest_extras(
+            base_manifest, schema=written_schema, partition_spec=spec
+        ),
     )
     while True:
         head = current_version(root)
@@ -3532,51 +3251,40 @@ def compact(
             if s not in base_segs
             and not set(_read_segment(root, s)) <= base_files
         ]
-        extra = (
-            {"schema": head_manifest["schema"]}
-            if "schema" in head_manifest
-            else {}
-        )
-        if cluster_spec is not None and "schema" in head_manifest:
+        schema = head_manifest.get("schema")
+        if cluster_spec is not None and schema:
             # clustered fold: the committed schema is the head's plus
             # the derived cell column, spec becomes the cell
-            fields = [
-                f
-                for f in head_manifest["schema"]["fields"]
-                if f["name"] != cell_col
-            ] + [
-                next(
+            schema = {
+                "type": "struct",
+                "fields": [
+                    f for f in schema["fields"] if f["name"] != cell_col
+                ]
+                + [
                     f
                     for f in written_schema["fields"]
                     if f["name"] == cell_col
-                )
-            ]
-            extra["schema"] = {"type": "struct", "fields": fields}
-            extra["cluster_spec"] = cluster_spec
-        if "schema" in head_manifest:
-            extra.update(
-                _ids_for_commit(
-                    head_manifest, extra["schema"]["fields"]
-                )
-            )
-        if head_manifest.get("stats_cols"):
-            extra["stats_cols"] = list(head_manifest["stats_cols"])
-        if head_manifest.get("bloom_cols"):
-            extra["bloom_cols"] = list(head_manifest["bloom_cols"])
-        if cluster_spec is not None:
-            extra["partition_spec"] = list(spec)
-        elif head_manifest.get("partition_spec"):
-            extra["partition_spec"] = list(head_manifest["partition_spec"])
+                ],
+            }
+        extra = _carry_manifest_extras(
+            head_manifest,
+            schema=schema,
+            partition_spec=spec if cluster_by else None,
+            cluster_spec=cluster_spec,
+        )
+        # deliberate break of the carry rule: the fold applied every
+        # delete, so both delete lists clear
+        extra.pop("delete_files", None)
+        extra.pop("eq_delete_files", None)
         if sort_by:
             extra["sort_spec"] = list(sort_by)
-        _carry_cluster(head_manifest, extra)
         try:
             return _commit(
                 root,
                 head,
                 "compact",
                 [folded_seg] + added_segs,
-                extra or None,
+                extra,
             )
         except ConcurrentCommit:
             continue

@@ -105,8 +105,8 @@ def test_bloom_survives_rename_probe_under_new_name(spark, tmp_path):
 
 
 def test_unbloomed_rewrites_are_conservative(spark, tmp_path):
-    """A COW rewrite doesn't rebuild blooms (compaction does); its
-    files must simply never be skipped."""
+    """A COW rewrite builds blooms for the files it writes, like every
+    commit; a pruned read across the rewrite must stay exact."""
     root = _store(spark, tmp_path, n=10000)
     snap.commit_delete_where(spark, root, F.col("uid") % 1000 == 7)
     m = snap.read_manifest(root, 2)
@@ -233,3 +233,82 @@ def test_bloom_and_partition_prune_compose(spark, tmp_path):
         .count()
     )
     assert got == 2
+
+
+# ------------------------------------------------ the carry rule, pinned
+
+
+def _carry_rows(spark, lo, hi):
+    return spark.range(lo, hi).selectExpr(
+        "id as k", "id as uid", "cast(id % 3 as string) as g", "id * 2 as v"
+    )
+
+
+def _carry_branch_publish(spark, root):
+    snap.create_branch(root, "b")
+    snap.commit_append(spark, root, _carry_rows(spark, 600, 610), ref="b")
+    return snap.publish_branch(root, "b")
+
+
+def _carry_rollback(spark, root):
+    snap.commit_append(spark, root, _carry_rows(spark, 600, 610))
+    return snap.rollback_to(root, 1)
+
+
+_CARRY_VERBS = {
+    "commit_append": lambda s, r: snap.commit_append(
+        s, r, _carry_rows(s, 600, 620)
+    ),
+    "commit_mor_upsert": lambda s, r: snap.commit_mor_upsert(
+        s, r, _carry_rows(s, 0, 10), ["k"]
+    ),
+    "commit_delete_where": lambda s, r: snap.commit_delete_where(
+        s, r, F.col("k") == 5
+    ),
+    "commit_mor_delete": lambda s, r: snap.commit_mor_delete(
+        s, r, F.col("k") == 5
+    ),
+    "commit_mor_delete_keys": lambda s, r: snap.commit_mor_delete_keys(
+        s, r, s.range(5, 7).selectExpr("id as k")
+    ),
+    "commit_overwrite_where": lambda s, r: snap.commit_overwrite_where(
+        s, r, _carry_rows(s, 0, 30).filter("g = '1'"), F.col("g") == "1"
+    ),
+    "commit_merge": lambda s, r: snap.commit_merge(
+        s, r, _carry_rows(s, 590, 610), ["k"]
+    ),
+    "commit_delete_keys": lambda s, r: snap.commit_delete_keys(
+        s, r, s.range(5, 7).selectExpr("id as k"), ["k"]
+    ),
+    "compact": lambda s, r: snap.compact(s, r),
+    "rollback_to": _carry_rollback,
+    "rename_column": lambda s, r: snap.rename_column(r, "v", "w"),
+    "publish_branch": _carry_branch_publish,
+}
+
+
+@pytest.mark.parametrize("verb", sorted(_CARRY_VERBS))
+def test_every_verb_carries_table_settings(spark, tmp_path, verb):
+    """The carry rule: whatever the commit verb, the head keeps the
+    table's stats, bloom and partition settings, so the NEXT append
+    still builds blooms (the opt-in never silently lapses)."""
+    root = str(tmp_path / "t")
+    snap.commit_append(
+        spark,
+        root,
+        _carry_rows(spark, 0, 600).repartition(2),
+        stats_cols=["uid"],
+        bloom_cols=["uid"],
+        partition_by=["g"],
+    )
+    _CARRY_VERBS[verb](spark, root)
+    m = snap.read_manifest(root, snap.current_version(root))
+    assert m["stats_cols"] == ["uid"]
+    assert m["bloom_cols"] == ["uid"]
+    assert m["partition_spec"] == ["g"]
+    names = [f["name"] for f in m["schema"]["fields"]]
+    v = snap.commit_append(
+        spark, root, _carry_rows(spark, 700, 720).toDF(*names)
+    )
+    seg = snap.read_manifest(root, v)["segments"][-1]
+    assert snap._read_segment_obj(root, seg).get("blooms")
